@@ -6,6 +6,9 @@ row count / schema (sorted column names) / values (rows sorted, cells
 stringified). Dev tool only — not part of the shipped library.
 
 Usage: python3 scripts/oracle_check.py <sfDir> <verifyOutDir> [query...]
+
+A query argument ending in `*` selects every query with that prefix
+(quote it: 's9_stream_*'); any other argument is an exact name.
 """
 import json
 import math
@@ -58,9 +61,16 @@ def wide_cols(con, sql):
             if "HUGEINT" in str(t) or "DECIMAL" in str(t) or "UBIGINT" in str(t)]
 
 
+def selected(name, patterns):
+    if not patterns:
+        return True
+    return any(name.startswith(p[:-1]) if p.endswith("*") else name == p
+               for p in patterns)
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:])
+    only = sys.argv[3:]
     con = duckdb.connect()
     for t in TABLES:
         p = Path(sf_dir) / f"{t}.parquet"
@@ -69,7 +79,7 @@ def main():
     oracles = json.loads((Path(out_dir) / "oracle_sql.json").read_text())
     n_pass = n_fail = 0
     for name, sql in sorted(oracles.items()):
-        if only and name not in only:
+        if not selected(name, only):
             continue
         pq = Path(out_dir) / name
         if not pq.exists():

@@ -5,10 +5,11 @@ import graft.functions.{AnswerStart, DetHash}
 import graft.ops.{CorpusOps, Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.EventsStream
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Scale-extension queries: the training-data-pipeline operator family
   * (near-dup detection via n-gram Jaccard / MinHash-LSH / SimHash,
@@ -205,6 +206,38 @@ object QueriesScale {
       build(path)
       path
     }
+
+  /** Gate shape of a stream twin: stage `inc` as one parquet file (one
+    * file ⇒ one micro-batch, which the single-fold oracles require),
+    * run `op` over it through [[EventsStream.incrementalSink]], wait,
+    * and read the sink back without `inc`. The staged increment is a
+    * pure function of the input data and read-only during the stream,
+    * so it goes through [[buildOnce]] like the gate indexes (under the
+    * bench memo the timed window is the stream, not the staging write:
+    * s9_stream_canon's ~25%-of-corpus staging write alone was 41.5 s
+    * at sf10); sink and checkpoint are fresh per call, so every run
+    * starts a stream and processes the whole increment. The read-back
+    * uses the schema of `op`'s own output, captured on the driver: an
+    * op that emits zero rows in every micro-batch leaves no parquet
+    * file in the sink, and reads back as an empty frame for the oracle
+    * to fail on instead of dying on schema inference.
+    */
+  private[graft] def streamTwin(s: SparkSession, dir: String, tag: String, inc: DataFrame)(
+      op: (DataFrame, Long) => DataFrame): DataFrame = {
+    val incDir = buildOnce(s"${tag}inc", dir)(p =>
+      inc.coalesce(1).write.mode("overwrite").parquet(p))
+    val outDir = GraftSession.freshGatePath(s"${tag}out", dir)
+    val ckpt   = GraftSession.freshGatePath(s"${tag}ckpt", dir)
+    val outSchema = new AtomicReference[StructType]()
+    EventsStream.incrementalSink(s, incDir, inc.schema, outDir, ckpt) { (batch, bid) =>
+      val out = op(batch, bid)
+      outSchema.set(out.schema)
+      out
+    }.awaitTermination()
+    val schema = Option(outSchema.get).getOrElse(
+      throw new IllegalStateException(s"stream twin '$tag' ran no micro-batch"))
+    s.read.schema(schema.add("inc", StringType)).parquet(outDir).drop("inc")
+  }
 
   /** The five retrieval gate queries — ONE definition for the four
     * Scala gates (inline, index, stream, rerank); `Bm25OracleSql`'s
@@ -1618,24 +1651,9 @@ object QueriesScale {
       val fresh = base.filter(col("id") < 25)
         .select((col("id") + 10000).as("id"), concat(col("text"), lit(" zz yy")).as("text"))
       val indexPath = buildOnce("lshsidx", dir)(p => Dedup.writeMinhashIndexMd5(base, "id", "text", p))
-      val freshDir = GraftSession.freshGatePath("lshstream", dir)
-      fresh.coalesce(1).write.mode("overwrite").parquet(freshDir)
-      val outDir = GraftSession.freshGatePath("lshstreamout", dir)
-      val ckpt   = GraftSession.freshGatePath("lshstreamckpt", dir)
-      val q = EventsStream.streamIncrementalDedup(
-        s, indexPath, freshDir, fresh.schema, outDir, ckpt)
-      q.awaitTermination()
-      // explicit read-back schema (r18 advice): a recall regression
-      // that emits ZERO pairs in every micro-batch leaves the
-      // partitioned sink with no parquet files, and a schema-less
-      // read would die on inference instead of handing the oracle an
-      // empty frame to fail cleanly on
-      val pairSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id_a", fresh.schema("id").dataType),
-        org.apache.spark.sql.types.StructField("id_b", fresh.schema("id").dataType),
-        org.apache.spark.sql.types.StructField("est_jaccard", org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("inc", org.apache.spark.sql.types.StringType)))
-      s.read.schema(pairSchema).parquet(outDir).drop("inc").orderBy(col("id_a"), col("id_b"))
+      streamTwin(s, dir, "lshstream", fresh)((b, _) =>
+        Dedup.probeMinhashIndexMd5(s, indexPath, b, "id", "text"))
+        .orderBy(col("id_a"), col("id_b"))
     }),
 
     // ---- INCREMENTAL semantic dedup against a persistent SIGN-PLANE
@@ -1725,19 +1743,9 @@ object QueriesScale {
         .select((col("vec_id") + 100000).as("vec_id"),
           transform(col("embedding"), x => (x * lit(2.0f)).cast("float")).as("embedding"))
       val indexPath = buildOnce("spsidx", dir)(p => Dedup.writeSignPlaneIndex(base, "vec_id", "embedding", p))
-      val freshDir = GraftSession.freshGatePath("spstream", dir)
-      fresh.coalesce(1).write.mode("overwrite").parquet(freshDir)
-      val outDir = GraftSession.freshGatePath("spstreamout", dir)
-      val ckpt   = GraftSession.freshGatePath("spstreamckpt", dir)
-      val q = EventsStream.streamSemanticDedup(s, indexPath, freshDir, fresh.schema, outDir, ckpt)
-      q.awaitTermination()
-      // explicit read-back schema — same rationale as s9_stream_neardup
-      val pairSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id_a", fresh.schema("vec_id").dataType),
-        org.apache.spark.sql.types.StructField("id_b", fresh.schema("vec_id").dataType),
-        org.apache.spark.sql.types.StructField("cosine", org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("inc", org.apache.spark.sql.types.StringType)))
-      s.read.schema(pairSchema).parquet(outDir).drop("inc").orderBy(col("id_a"), col("id_b"))
+      streamTwin(s, dir, "spstream", fresh)((b, _) =>
+        Dedup.probeSignPlaneIndex(s, indexPath, b, "vec_id", "embedding", 0.99))
+        .orderBy(col("id_a"), col("id_b"))
     }),
 
     // ---- SEMANTIC dedup end to end: the embedding twin of
@@ -1946,18 +1954,12 @@ object QueriesScale {
       val base = e.filter(pmod(col("vec_id"), lit(7)) =!= 3)
       val inc = e.filter(pmod(col("vec_id"), lit(7)) === 3)
         .select(col("vec_id"), col("embedding"))
-      // staged increment built once like the gate indexes (r19, the
-      // s9_stream_ingest precedent): it is a pure function of the
-      // input data and read-only during the stream, so the timed
-      // window is the stream, not the staging write
-      val incDir = buildOnce("annjstreaminc", dir)(p =>
-        inc.coalesce(1).write.mode("overwrite").parquet(p))
-      val outDir = GraftSession.freshGatePath("annjout", dir)
-      val ckpt   = GraftSession.freshGatePath("annjckpt", dir)
-      val q = EventsStream.streamAnnJoin(s, base, incDir, inc.schema, outDir, ckpt,
-        k = 2, nProbe = 2)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc")
+      // the base side is static across micro-batches: size it once
+      // here, not once per batch just to re-derive the same nCells
+      val baseSize = base.count()
+      streamTwin(s, dir, "annjstream", inc)((b, _) =>
+        Similarity.annJoinAuto(b, base, "vec_id", "embedding", k = 2,
+          nProbe = 2, baseSize = Some(baseSize)))
         .select(col("left_id"), col("rank"), col("right_id"), col("cosine"))
         .orderBy(col("left_id"), col("rank"))
     }),
@@ -2037,13 +2039,8 @@ object QueriesScale {
       val fresh = e.filter(col("vec_id") < 20)
         .select((col("vec_id") + lit(100000L)).as("vec_id"),
           expr("transform(embedding, x -> cast(x * 2 as float))").as("embedding"))
-      val incDir = GraftSession.freshGatePath("kmstream", dir)
-      fresh.coalesce(1).write.mode("overwrite").parquet(incDir)
-      val outDir = GraftSession.freshGatePath("kmout", dir)
-      val ckpt   = GraftSession.freshGatePath("kmckpt", dir)
-      val q = EventsStream.streamClusterAssign(s, path, incDir, fresh.schema, outDir, ckpt)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc")
+      streamTwin(s, dir, "km", fresh)((b, _) =>
+        Similarity.assignWithCentroids(s, path, b, "vec_id", "embedding"))
         .select(col("vec_id"), col("cluster"), col("cosine"))
         .orderBy(col("vec_id"))
     }),
@@ -2080,13 +2077,8 @@ object QueriesScale {
       val fresh = e.filter(col("vec_id") < 20)
         .select((col("vec_id") + lit(100000L)).as("vec_id"),
           expr("transform(embedding, x -> cast(x * 2 as float))").as("embedding"))
-      val incDir = GraftSession.freshGatePath("kmrecinc", dir)
-      fresh.coalesce(1).write.mode("overwrite").parquet(incDir)
-      val outDir = GraftSession.freshGatePath("kmrecout", dir)
-      val ckpt   = GraftSession.freshGatePath("kmrecckpt", dir)
-      val q = EventsStream.streamRecenter(s, path, incDir, fresh.schema, outDir, ckpt)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc")
+      streamTwin(s, dir, "kmrec", fresh)((b, _) =>
+        Similarity.recenterWithIncrement(s, path, b, "vec_id", "embedding"))
         .select(col("cluster"), col("n_inc"), col("drift"))
         .orderBy(col("cluster"))
     }),
@@ -2123,17 +2115,12 @@ object QueriesScale {
       val fresh = e.filter(col("vec_id") < 20)
         .select((col("vec_id") + lit(100000L)).as("vec_id"),
           expr("transform(embedding, x -> cast(x * 2 as float))").as("embedding"))
-      // read-only staged increment -> memoizable (r19); the MODEL
-      // path stays fresh per invocation because the stream retrains
-      // (mutates) it
-      val incDir = buildOnce("kmretinc", dir)(p =>
-        fresh.coalesce(1).write.mode("overwrite").parquet(p))
-      val outDir = GraftSession.freshGatePath("kmretout", dir)
-      val ckpt   = GraftSession.freshGatePath("kmretckpt", dir)
-      val q = EventsStream.streamRetrain(s, path, incDir, fresh.schema, outDir, ckpt,
-        corpus = e, k = 8, iters = 1, driftThreshold = 0.99)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc")
+      // the MODEL path stays fresh per invocation because the stream
+      // retrains (mutates) it; the versioned republish keeps a
+      // replayed batch folding against the model it first saw
+      streamTwin(s, dir, "kmret", fresh)((b, bid) =>
+        Similarity.retrainWhenDriftedVersioned(s, path, bid, b, "vec_id", "embedding",
+          corpus = e, k = 8, iters = 1, driftThreshold = 0.99))
         .select(col("cluster"), col("n_inc"), col("drift"), col("retrained"))
         .orderBy(col("cluster"))
     }),
@@ -2491,17 +2478,8 @@ object QueriesScale {
       val path = buildOnce("ingestgatestream", dir)(pth =>
         CorpusOps.writeIngestGateState(ref, "doc_id", "text",
           ingestBench(s, dir), "bench_id", "btext", pth))
-      // staged increment = gate fixture (single file ⇒ one
-      // micro-batch, as the union-batch oracle requires); built once
-      // like the index so the timed window is the stream, not the
-      // serialized staging write of a corpus-fraction increment
-      val incDir = buildOnce("ingeststreaminc", dir)(p =>
-        inc.coalesce(1).write.mode("overwrite").parquet(p))
-      val outDir = GraftSession.freshGatePath("ingestout", dir)
-      val ckpt   = GraftSession.freshGatePath("ingestckpt", dir)
-      val q = EventsStream.streamIngestGate(s, path, incDir, inc.schema, outDir, ckpt)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc")
+      streamTwin(s, dir, "ingeststream", inc)((b, bid) =>
+        CorpusOps.ingestGateWithState(s, path, b, "doc_id", "text", s"b$bid"))
         .orderBy(col("bucket"), col("shard"), col("position"))
     }),
 
@@ -2513,15 +2491,10 @@ object QueriesScale {
       val (planted, path) = qpipeModels(s, dir, "qpipemodelsstream")
       val inc = planted.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      // read-only staged increment -> memoizable (r19, the
-      // s9_stream_ingest precedent)
-      val incDir = buildOnce("qpipestreaminc", dir)(p =>
-        inc.coalesce(1).write.mode("overwrite").parquet(p))
-      val outDir = GraftSession.freshGatePath("qpipeout", dir)
-      val ckpt   = GraftSession.freshGatePath("qpipeckpt", dir)
-      val q = EventsStream.streamQualityPipeline(s, path, incDir, inc.schema, outDir, ckpt)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc").orderBy(col("doc_id"))
+      streamTwin(s, dir, "qpipestream", inc)((b, _) =>
+        TextAnalysis.qualityPipelineWithModels(s,
+          s"$path/span", s"$path/nb", s"$path/kn", b, "doc_id", "text"))
+        .orderBy(col("doc_id"))
     }),
 
     // ---- the PERSISTED-index steady state of the C4 cut: the
@@ -2556,13 +2529,9 @@ object QueriesScale {
         Dedup.writeSpanIndex(
           planted.filter(pmod(col("doc_id"), lit(3)) === 0), "doc_id", "text", p))
       val inc = planted.filter(pmod(col("doc_id"), lit(9)) === 4)
-      val incDir = GraftSession.freshGatePath("spanstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
-      val outDir = GraftSession.freshGatePath("spanout", dir)
-      val ckpt   = GraftSession.freshGatePath("spanckpt", dir)
-      val q = EventsStream.streamSpanDedup(s, path, incDir, inc.schema, outDir, ckpt)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc").orderBy(col("doc_id"))
+      streamTwin(s, dir, "span", inc)((b, _) =>
+        Dedup.spanDedupWithIndex(s, path, b, "doc_id", "text"))
+        .orderBy(col("doc_id"))
     }),
 
     "x_dedup_intradoc" -> ((s, dir) => {
@@ -2640,14 +2609,9 @@ object QueriesScale {
       val indexPath = buildOnce("subsidx", dir)(p =>
         CorpusOps.writeSubstringIndex(base, "id", "text", p, window = 8))
       val fresh    = substringIncrement(s, dir)
-      val freshDir = GraftSession.freshGatePath("substream", dir)
-      fresh.coalesce(1).write.mode("overwrite").parquet(freshDir)
-      val outDir = GraftSession.freshGatePath("subout", dir)
-      val ckpt   = GraftSession.freshGatePath("subckpt", dir)
-      val q = EventsStream.streamSubstringDedup(
-        s, indexPath, freshDir, fresh.schema, outDir, ckpt, window = 8)
-      q.awaitTermination()
-      s.read.parquet(outDir).orderBy(col("id"))
+      streamTwin(s, dir, "sub", fresh)((b, _) =>
+        CorpusOps.probeSubstringIndex(s, indexPath, b, "id", "text", window = 8))
+        .orderBy(col("id"))
     }),
 
     // ---- exact edit-distance similarity join (ed ≤ 1), PassJoin
@@ -2886,13 +2850,9 @@ object QueriesScale {
           d.filter(pmod(col("doc_id"), lit(3)) === 0), "text", p, topV = 256))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      val incDir = GraftSession.freshGatePath("zipfstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
-      val outDir = GraftSession.freshGatePath("zipfout", dir)
-      val ckpt   = GraftSession.freshGatePath("zipfckpt", dir)
-      val q = EventsStream.streamZipfScore(s, ranksPath, incDir, inc.schema, outDir, ckpt)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc").orderBy(col("doc_id"))
+      streamTwin(s, dir, "zipf", inc)((b, _) =>
+        TextAnalysis.scoreWithZipfRanks(s, ranksPath, b, "doc_id", "text"))
+        .orderBy(col("doc_id"))
     }),
 
     // ---- BIGRAM (LM) surprisal: the conditional-probability upgrade
@@ -2938,13 +2898,9 @@ object QueriesScale {
           oovBits = 16, minCount = 2L))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      val incDir = GraftSession.freshGatePath("bigramstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
-      val outDir = GraftSession.freshGatePath("bigramout", dir)
-      val ckpt   = GraftSession.freshGatePath("bigramckpt", dir)
-      val q = EventsStream.streamBigramScore(s, countsPath, incDir, inc.schema, outDir, ckpt)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc").orderBy(col("doc_id"))
+      streamTwin(s, dir, "bigram", inc)((b, _) =>
+        TextAnalysis.scoreWithBigramCounts(s, countsPath, b, "doc_id", "text"))
+        .orderBy(col("doc_id"))
     }),
 
     // ---- STUPID-BACKOFF (Brants 2007): the deployed LM-filter shape
@@ -2992,13 +2948,9 @@ object QueriesScale {
           oovBits = 16, minCount = 2L, backoffBits = 2))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      val incDir = GraftSession.freshGatePath("backoffstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
-      val outDir = GraftSession.freshGatePath("backoffout", dir)
-      val ckpt   = GraftSession.freshGatePath("backoffckpt", dir)
-      val q = EventsStream.streamBackoffScore(s, path, incDir, inc.schema, outDir, ckpt)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc").orderBy(col("doc_id"))
+      streamTwin(s, dir, "backoff", inc)((b, _) =>
+        TextAnalysis.scoreWithBackoffModel(s, path, b, "doc_id", "text"))
+        .orderBy(col("doc_id"))
     }),
 
     // ---- SUPERVISED quality gate — the CCNet/GPT-3 classifier
@@ -3048,13 +3000,9 @@ object QueriesScale {
           "text", "__is_en", p, oovBits = 16, minCount = 2L))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      val incDir = GraftSession.freshGatePath("nbstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
-      val outDir = GraftSession.freshGatePath("nbout", dir)
-      val ckpt   = GraftSession.freshGatePath("nbckpt", dir)
-      val q = EventsStream.streamNbScore(s, path, incDir, inc.schema, outDir, ckpt)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc").orderBy(col("doc_id"))
+      streamTwin(s, dir, "nb", inc)((b, _) =>
+        TextAnalysis.scoreWithNbModel(s, path, b, "doc_id", "text"))
+        .orderBy(col("doc_id"))
     }),
 
     // ---- the JUDGE of the supervised gate: held-out evaluation of
@@ -3106,13 +3054,8 @@ object QueriesScale {
           "text", "__is_en", p, oovBits = 16, minCount = 2L))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"), (col("lang") === "en").as("pos"))
-      val incDir = GraftSession.freshGatePath("nbevalstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
-      val outDir = GraftSession.freshGatePath("nbevalout", dir)
-      val ckpt   = GraftSession.freshGatePath("nbevalckpt", dir)
-      val q = EventsStream.streamNbEval(s, path, incDir, inc.schema, "pos", outDir, ckpt)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc")
+      streamTwin(s, dir, "nbeval", inc)((b, _) =>
+        TextAnalysis.evalWithNbModel(s, path, b, "doc_id", "text", "pos"))
     }),
 
     // ---- KNESER-NEY smoothed LM — the top rung of the quality-LM
@@ -3160,13 +3103,9 @@ object QueriesScale {
           oovBits = 16, minCount = 2L))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      val incDir = GraftSession.freshGatePath("knstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
-      val outDir = GraftSession.freshGatePath("knout", dir)
-      val ckpt   = GraftSession.freshGatePath("knckpt", dir)
-      val q = EventsStream.streamKnScore(s, path, incDir, inc.schema, outDir, ckpt)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc").orderBy(col("doc_id"))
+      streamTwin(s, dir, "kn", inc)((b, _) =>
+        TextAnalysis.scoreWithKnModel(s, path, b, "doc_id", "text"))
+        .orderBy(col("doc_id"))
     }),
 
     // ---- CORPUS-DRIFT monitor: integer-exact total-variation
@@ -3230,8 +3169,9 @@ object QueriesScale {
       val incDir = buildOnce("driftfoldinc", dir)(p =>
         inc.coalesce(1).write.mode("overwrite").parquet(p))
       val ckpt = GraftSession.freshGatePath("driftfoldckpt", dir)
-      val q = EventsStream.streamDriftRefFold(s, path, incDir, inc.schema, ckpt)
-      q.awaitTermination()
+      EventsStream.foreachBatchOnce(s, incDir, inc.schema, ckpt) { (b, bid) =>
+        TextAnalysis.appendToDriftRef(s, path, b, "text", s"b$bid")
+      }.awaitTermination()
       TextAnalysis.driftWithRefFolded(s, path,
         d.filter(pmod(col("doc_id"), lit(9)) === 4), "text")
     }),
@@ -3247,13 +3187,8 @@ object QueriesScale {
           d.filter(pmod(col("doc_id"), lit(3)) === 0), "text", p))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      val incDir = GraftSession.freshGatePath("driftstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
-      val outDir = GraftSession.freshGatePath("driftout", dir)
-      val ckpt   = GraftSession.freshGatePath("driftckpt", dir)
-      val q = EventsStream.streamDrift(s, path, incDir, inc.schema, outDir, ckpt)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc")
+      streamTwin(s, dir, "drift", inc)((b, _) =>
+        TextAnalysis.driftWithRef(s, path, b, "text"))
     }),
 
     // ---- INTEGER-EXACT PCA: the dimensionality-reduction stage an
@@ -3303,13 +3238,9 @@ object QueriesScale {
         Similarity.writePcaModel(e, "vec_id", "embedding", p, scale = 1000L, iters = 3))
       val inc = e.filter(pmod(col("vec_id"), lit(9)) === 4)
         .select(col("vec_id"), col("embedding"))
-      val incDir = GraftSession.freshGatePath("pcastream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
-      val outDir = GraftSession.freshGatePath("pcaout", dir)
-      val ckpt   = GraftSession.freshGatePath("pcackpt", dir)
-      val q = EventsStream.streamPcaProject(s, path, incDir, inc.schema, outDir, ckpt)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc").orderBy(col("vec_id"))
+      streamTwin(s, dir, "pca", inc)((b, _) =>
+        Similarity.projectWithPcaModel(s, path, b, "vec_id", "embedding"))
+        .orderBy(col("vec_id"))
     }),
 
     // ---- int8-quantized ANN: the 4x-memory embedding layout, ranked
@@ -3425,13 +3356,10 @@ object QueriesScale {
       val qs = retrievalQueries(s)
       val indexPath = buildOnce("bm25sidx", dir)(p =>
         TextAnalysis.writeBm25Index(d, "doc_id", "text", p))
-      val qDir = GraftSession.freshGatePath("prfqstream", dir)
-      qs.coalesce(1).write.mode("overwrite").parquet(qDir)
-      val outDir = GraftSession.freshGatePath("prfout", dir)
-      val ckpt   = GraftSession.freshGatePath("prfckpt", dir)
-      val q = EventsStream.streamPrfProbe(s, indexPath, qDir, qs.schema, d, outDir, ckpt, k = 5)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc").orderBy(col("query_id"), col("rank"))
+      streamTwin(s, dir, "prf", qs)((b, _) =>
+        TextAnalysis.probeBm25IndexPrf(s, indexPath, b, "query_id", "qtext",
+          d, "doc_id", "text", 5))
+        .orderBy(col("query_id"), col("rank"))
     }),
 
     // ---- the SAME retrieval against the PERSISTENT postings index:
@@ -3515,9 +3443,9 @@ object QueriesScale {
         val chDir = GraftSession.freshGatePath("cdcchanges", dir)
         diff.coalesce(1).write.mode("overwrite").parquet(chDir)
         val ckpt = GraftSession.freshGatePath("cdcckpt", dir)
-        val q = EventsStream.streamCdcIndexMaintenance(
-          s, p, chDir, diff.schema, ckpt)
-        q.awaitTermination()
+        EventsStream.foreachBatchOnce(s, chDir, diff.schema, ckpt) { (b, bid) =>
+          TextAnalysis.applyCdcToBm25Index(b, "doc_id", "text", p, batchId = s"sb$bid")
+        }.awaitTermination()
       }
       TextAnalysis.probeBm25Index(s, path, retrievalQueries(s), "query_id", "qtext", k = 5)
         .orderBy(col("query_id"), col("rank"))
@@ -3578,15 +3506,9 @@ object QueriesScale {
           d, "doc_id", "text", d.filter(col("lang") === "de"), "text", p))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      val incDir = GraftSession.freshGatePath("dsirstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
-      val outDir = GraftSession.freshGatePath("dsirout", dir)
-      val ckpt   = GraftSession.freshGatePath("dsirckpt", dir)
-      val q = EventsStream.streamAffinityScore(s, wPath, incDir, inc.schema, outDir, ckpt)
-      q.awaitTermination()
-      // drop the sink's exactly-once batch-partition key — oracle
-      // compares the score columns only
-      s.read.parquet(outDir).drop("inc").orderBy(col("doc_id"))
+      streamTwin(s, dir, "dsir", inc)((b, _) =>
+        TextAnalysis.scoreWithAffinityWeights(s, wPath, b, "doc_id", "text"))
+        .orderBy(col("doc_id"))
     }),
 
     // ---- deterministic domain-mixture cut: per-source token budgets
@@ -3610,13 +3532,9 @@ object QueriesScale {
       val qs = retrievalQueries(s)
       val indexPath = buildOnce("bm25sidx", dir)(p =>
         TextAnalysis.writeBm25Index(docs(s, dir), "doc_id", "text", p))
-      val qDir = GraftSession.freshGatePath("bm25qstream", dir)
-      qs.coalesce(1).write.mode("overwrite").parquet(qDir)
-      val outDir = GraftSession.freshGatePath("bm25out", dir)
-      val ckpt   = GraftSession.freshGatePath("bm25ckpt", dir)
-      val q = EventsStream.streamBm25Probe(s, indexPath, qDir, qs.schema, outDir, ckpt, k = 5)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc").orderBy(col("query_id"), col("rank"))
+      streamTwin(s, dir, "bm25", qs)((b, _) =>
+        TextAnalysis.probeBm25Index(s, indexPath, b, "query_id", "qtext", k = 5))
+        .orderBy(col("query_id"), col("rank"))
     }),
 
     // ---- the DENSE leg online: query VECTORS arrive as a stream and
@@ -3629,14 +3547,8 @@ object QueriesScale {
       val indexPath = buildOnce("qivfs", dir)(p =>
         Similarity.writeIvfIndexQuantized(e, "vec_id", "embedding", p, nCells = 16))
       val qs = e.filter(col("vec_id") < 5).select(col("vec_id"), col("embedding"))
-      val qDir = GraftSession.freshGatePath("annqstream", dir)
-      qs.coalesce(1).write.mode("overwrite").parquet(qDir)
-      val outDir = GraftSession.freshGatePath("annout", dir)
-      val ckpt   = GraftSession.freshGatePath("annckpt", dir)
-      val q = EventsStream.streamAnnProbe(s, indexPath, qDir, qs.schema, outDir, ckpt,
-        k = 3, nProbe = 4)
-      q.awaitTermination()
-      s.read.parquet(outDir)
+      streamTwin(s, dir, "ann", qs)((b, _) =>
+        Similarity.probeIvfIndexQuantized(s, indexPath, b, "vec_id", "embedding", 3, 4))
         .select(col("query_id"), col("rank"), col("neighbor_id"), col("qcosine"))
         .orderBy(col("query_id"), col("rank"))
     }),
@@ -3741,14 +3653,19 @@ object QueriesScale {
         TextAnalysis.writeBm25Index(d, "doc_id", "text", p))
       val ivfPath = buildOnce("ivfbase", dir)(p =>
         Similarity.writeIvfIndex(e, "vec_id", "embedding", p, nCells = 16))
-      val qDir = GraftSession.freshGatePath("fusionqstream", dir)
-      qs.coalesce(1).write.mode("overwrite").parquet(qDir)
-      val outDir = GraftSession.freshGatePath("fusionout", dir)
-      val ckpt   = GraftSession.freshGatePath("fusionckpt", dir)
-      val q = EventsStream.streamFusionProbe(s, bmPath, ivfPath, qDir, qs.schema,
-        e, d, outDir, ckpt)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc").orderBy(col("query_id"), col("rerank"))
+      streamTwin(s, dir, "fusion", qs) { (b, _) =>
+        val lex = TextAnalysis.probeBm25Index(s, bmPath, b, "query_id", "qtext", k = 20)
+          .select(col("query_id"), col("doc_id"), col("rank").as("lex_rank"))
+        // each arriving query's embedding looked up from the persisted
+        // snapshot by id: the "query encoder output" at serve time
+        val qe = e.join(b.select(col("query_id").cast("long").as("__qid")),
+          col("vec_id") === col("__qid"), "left_semi")
+        val dense = Similarity.probeIvfIndex(s, ivfPath, qe, "vec_id", "embedding",
+            k = 20, nProbe = 4)
+          .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank").as("dense_rank"))
+        graft.ops.Retrieval.rrfFuseRerank(lex, dense, b, "query_id", "qtext",
+          d, "doc_id", "text", new graft.scorer.MockRelevanceScorer)
+      }.orderBy(col("query_id"), col("rerank"))
     }),
 
     // ---- retrieval EVAL: MRR + recall@10 of the BM25 retriever
@@ -3774,20 +3691,20 @@ object QueriesScale {
     // micro-batch probes the persistent BM25 index AND is judged
     // against the static labels inside foreachBatch — evaluation at
     // ingest (per-query metrics are batch-local by construction, so
-    // stream ≡ batch and the one oracle gates both surfaces).
+    // stream ≡ batch and the one oracle gates both surfaces). The
+    // labels re-tokenize the corpus per micro-batch; a deployment
+    // would persist them beside the index.
     "s9_stream_metrics" -> ((s, dir) => {
       import graft.ops.TextAnalysis
       val d  = docs(s, dir)
       val qs = retrievalQueries(s)
       val indexPath = buildOnce("bm25sidx", dir)(p =>
         TextAnalysis.writeBm25Index(d, "doc_id", "text", p))
-      val qDir = GraftSession.freshGatePath("bm25mstream", dir)
-      qs.coalesce(1).write.mode("overwrite").parquet(qDir)
-      val outDir = GraftSession.freshGatePath("bm25mout", dir)
-      val ckpt   = GraftSession.freshGatePath("bm25mckpt", dir)
-      val q = EventsStream.streamRetrievalEval(s, indexPath, qDir, qs.schema, d, outDir, ckpt)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc").orderBy(col("query_id"))
+      streamTwin(s, dir, "bm25m", qs) { (b, _) =>
+        val top = TextAnalysis.probeBm25Index(s, indexPath, b, "query_id", "qtext", k = 10)
+          .select(col("query_id"), col("doc_id"), col("rank"))
+        TextAnalysis.retrievalMetrics(top, d, "doc_id", "text", b, "query_id", "qtext")
+      }.orderBy(col("query_id"))
     }),
 
     // ---- ANN EVAL: recall@10 of the IVF approximate path measured
@@ -3922,16 +3839,9 @@ object QueriesScale {
       }
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      // read-only staged increment -> memoizable (r19, the
-      // s9_stream_ingest precedent)
-      val incDir = buildOnce("contamstreaminc", dir)(p =>
-        inc.coalesce(1).write.mode("overwrite").parquet(p))
-      val outDir = GraftSession.freshGatePath("contamout", dir)
-      val ckpt   = GraftSession.freshGatePath("contamckpt", dir)
-      val q = EventsStream.streamContaminationCheck(s, path, incDir, inc.schema,
-        outDir, ckpt, minShared = 8)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc").orderBy(col("id"), col("bench_id"))
+      streamTwin(s, dir, "contamstream", inc)((b, _) =>
+        CorpusOps.contaminationProbe(s, path, b, "doc_id", "text", minShared = 8))
+        .orderBy(col("id"), col("bench_id"))
     }),
 
     // ---- URL/domain inventory over synthetically injected links
@@ -4054,13 +3964,9 @@ object QueriesScale {
         TextAnalysis.writeBpeMerges(d, "text", p, nMerges = 10))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      val incDir = GraftSession.freshGatePath("bpestream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
-      val outDir = GraftSession.freshGatePath("bpeout", dir)
-      val ckpt   = GraftSession.freshGatePath("bpeckpt", dir)
-      val q = EventsStream.streamBpeEncode(s, mergesPath, incDir, inc.schema, outDir, ckpt)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc").orderBy(col("doc_id"))
+      streamTwin(s, dir, "bpe", inc)((b, _) =>
+        TextAnalysis.encodeWithBpeMerges(s, mergesPath, b, "doc_id", "text"))
+        .orderBy(col("doc_id"))
     }),
 
     // ---- BPE TOKENIZATION to token IDS: the trainer hand-off — vocab
@@ -4171,13 +4077,8 @@ object QueriesScale {
         .select(col("doc_id"), col("text"))
       val mPath = buildOnce("currmanstream", dir)(p =>
         CorpusOps.writeCurriculumManifest(base, "doc_id", "text", shards = 4, p))
-      val incDir = GraftSession.freshGatePath("currstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
-      val outDir = GraftSession.freshGatePath("currout", dir)
-      val ckpt   = GraftSession.freshGatePath("currckpt", dir)
-      val q = EventsStream.streamCurriculumAppend(s, mPath, incDir, inc.schema, outDir, ckpt)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc")
+      streamTwin(s, dir, "curr", inc)((b, bid) =>
+        CorpusOps.appendToCurriculum(s, mPath, b, "doc_id", "text", s"b$bid"))
         .orderBy(col("bucket"), col("shard"), col("position"))
     }),
 
@@ -4290,23 +4191,20 @@ object QueriesScale {
         .select(col("doc_id"), col("text"))
       val mPath = buildOnce("shardmanstream", dir)(p =>
         CorpusOps.writeShardManifest(base, "doc_id", "text", shards = 8, p))
-      val incDir = GraftSession.freshGatePath("shardstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
-      val outDir = GraftSession.freshGatePath("shardout", dir)
-      val ckpt   = GraftSession.freshGatePath("shardckpt", dir)
-      val q = EventsStream.streamShardAppend(s, mPath, incDir, inc.schema, outDir, ckpt)
-      q.awaitTermination()
-      val out = s.read.parquet(outDir)
+      val nBatches = new AtomicInteger(0)
+      val out = streamTwin(s, dir, "shard", inc) { (b, bid) =>
+        nBatches.incrementAndGet()
+        CorpusOps.appendToShards(s, mPath, b, "doc_id", "text", incrementId = s"sb$bid")
+      }
       // diagnostic (VERDICT r10 task 1b): the single-fold oracle
       // assumes the one-file increment arrives as ONE micro-batch —
       // positions are arrival-ordered, so a split would produce
       // exactly "rows match, values don't". Name that condition
       // loudly in the gate log instead of letting it masquerade as a
       // silent hash mismatch.
-      val nBatches = out.select(col("inc")).distinct().count()
-      if (nBatches != 1L)
+      if (nBatches.get != 1)
         System.err.println(
-          s"[diag] s9_stream_shard: increment split into $nBatches micro-batches — " +
+          s"[diag] s9_stream_shard: increment split into ${nBatches.get} micro-batches — " +
             "positions are arrival-ordered and CANNOT match the single-fold oracle")
       out
         .select(col("shard"), col("position"), col("doc_id"), col("n_tokens"), col("shard_offset"))
@@ -4419,24 +4317,11 @@ object QueriesScale {
         .select(col("doc_id"), col("text"))
       val path = buildOnce("canonindexstream", dir)(pth =>
         Dedup.writeCanonIndex(ref, "doc_id", "text", pth))
-      // the staged increment is GATE FIXTURE, not operator work: this
-      // increment is ~25% of the corpus (every evasive twin + the
-      // %9=4 slice), and its single-file staging write (one file ⇒
-      // exactly one micro-batch, which the union-batch oracle
-      // requires — twins split across batches would not see each
-      // other) is a serialized O(increment) task that dominated the
-      // row a decade up (r18 sf10 probe: 41.5 s, slope 9.9, vs the
-      // 2.6 s batch probe of the SAME operator). buildOnce moves it
-      // out of the timed window exactly like the index build; the
-      // checkpoint and sink stay fresh per run, so every measured run
-      // still starts a stream and processes the full batch.
-      val incDir = buildOnce("canonstreaminc", dir)(p =>
-        inc.coalesce(1).write.mode("overwrite").parquet(p))
-      val outDir = GraftSession.freshGatePath("canonout", dir)
-      val ckpt   = GraftSession.freshGatePath("canonckpt", dir)
-      val q = EventsStream.streamCanonDedup(s, path, incDir, inc.schema, outDir, ckpt)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc").orderBy(col("doc_id"))
+      // one staged micro-batch is what the union-batch oracle
+      // requires: twins split across batches would not see each other
+      streamTwin(s, dir, "canonstream", inc)((b, _) =>
+        Dedup.canonDedupWithIndex(s, path, b, "doc_id", "text"))
+        .orderBy(col("doc_id"))
     }),
 
     // ---- index MAINTENANCE: an accepted crawl month's canonical
@@ -4526,13 +4411,9 @@ object QueriesScale {
           d.filter(pmod(col("doc_id"), lit(3)) === 0), "doc_id", "text", p))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      val incDir = GraftSession.freshGatePath("winnowstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
-      val outDir = GraftSession.freshGatePath("winnowout", dir)
-      val ckpt   = GraftSession.freshGatePath("winnowckpt", dir)
-      val q = EventsStream.streamWinnowOverlap(s, path, incDir, inc.schema, outDir, ckpt)
-      q.awaitTermination()
-      s.read.parquet(outDir).drop("inc").orderBy(col("doc_ref"), col("doc_inc"))
+      streamTwin(s, dir, "winnow", inc)((b, _) =>
+        TextAnalysis.winnowOverlapWithIndex(s, path, b, "doc_id", "text"))
+        .orderBy(col("doc_ref"), col("doc_inc"))
     }),
 
     "x_fingerprint_rolling" -> ((s, dir) => {

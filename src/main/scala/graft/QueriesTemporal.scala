@@ -422,23 +422,17 @@ object QueriesTemporal {
     // the oracle semantics, so one SQL gates both flavors.
     "s9_stream_bloom" -> ((s, dir) => {
       import graft.ops.Sketches
-      import graft.streaming.EventsStream
       val (m, kh) = (32768, 3)
       val orders = table(s, dir, "orders")
       val sketchPath = GraftSession.freshGatePath("bloomidx", dir)
       Sketches.bloomBuild(orders.select(col("o_custkey")), "o_custkey", m, kh)
         .write.mode("overwrite").parquet(sketchPath)
       val probe = table(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
-      val probeDir = GraftSession.freshGatePath("bloomstream", dir)
-      probe.coalesce(2).write.mode("overwrite").parquet(probeDir)
-      val outDir = GraftSession.freshGatePath("bloomout", dir)
-      val ckpt   = GraftSession.freshGatePath("bloomckpt", dir)
-      val q = EventsStream.streamBloomProbe(s, sketchPath, probeDir, probe.schema,
-        "c_custkey", outDir, ckpt, m, kh)
-      q.awaitTermination()
+      val probed = QueriesScale.streamTwin(s, dir, "bloom", probe)((b, _) =>
+        Sketches.bloomMaybeContains(s.read.parquet(sketchPath), b, "c_custkey", m, kh))
       val buyers = orders.select(col("o_custkey").as("c_custkey")).distinct()
         .withColumn("has_order", lit(true))
-      s.read.parquet(outDir).join(buyers, Seq("c_custkey"), "left")
+      probed.join(buyers, Seq("c_custkey"), "left")
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_probed"),
           count(when(col("maybe"), 1)).as("n_maybe"),

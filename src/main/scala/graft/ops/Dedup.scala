@@ -1880,7 +1880,7 @@ object Dedup {
     // stream-static caller must restart within the compaction grace
     // window (the engine's own streaming twin instead runs THIS
     // batch probe per micro-batch inside foreachBatch —
-    // EventsStream.streamSemanticDedup — re-resolving the listing
+    // EventsStream.incrementalSink — re-resolving the listing
     // every batch, the shape to copy for long-lived streams).
     if (newEmb.isStreaming)
       probeSignPlaneIndexPlan(spark, path, newEmb, idCol, vecCol, threshold, planes)

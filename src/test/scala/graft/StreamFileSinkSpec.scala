@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 /** The production file-sink streaming paths against their batch
   * oracles: append-mode parquet for the windowed rollup (only
   * finalized windows emitted), foreachBatch + latest-per-user for the
-  * custom-state stats.
+  * custom-state stats, and the stream-twin read-back of an empty sink.
   */
 class StreamFileSinkSpec extends SparkSpecBase {
   import spark.implicits._
@@ -121,6 +121,21 @@ class StreamFileSinkSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .sortBy(_._1)
     assert(got === exp)
+  }
+
+  test("streamTwin reads a sink the op never wrote to back as an empty frame " +
+      "with the op's schema") {
+    // an op that emits zero rows in every micro-batch leaves the
+    // partitioned sink with no parquet file; a schema-less read would
+    // die on inference instead of handing the oracle an empty frame
+    val docs = GraftSession.table(spark, sf, "documents")
+      .select(col("doc_id"), col("text"))
+    val op = (b: org.apache.spark.sql.DataFrame, _: Long) =>
+      b.filter(lit(false)).select(col("doc_id").as("id_a"), length(col("text")).as("len"))
+    val got = QueriesScale.streamTwin(spark, sf, "emptytwin", docs.limit(5))(op)
+    assert(got.schema.map(f => f.name -> f.dataType) ===
+      op(docs, 0L).schema.map(f => f.name -> f.dataType))
+    assert(got.count() === 0L)
   }
 }
 
@@ -268,30 +283,48 @@ class StreamSessionSpec extends SparkSpecBase {
       "(batch-id keyed dynamic overwrite)") {
     // the round-9 advice bug: plain mode("append") in foreachBatch
     // duplicates rows when a checkpoint-recovered micro-batch
-    // replays. All probe/score/eval sinks now key their output by
-    // inc=batchId and dynamic-overwrite — a replay rewrites its own
-    // partition. Proven here on the metrics sink (the advised site):
-    // wipe the checkpoint, rerun, output must be byte-identical.
-    import graft.ops.TextAnalysis
+    // replays. Every incremental sink keys its output by
+    // inc=batchId and dynamic-overwrites — a replay rewrites its own
+    // partition. Proven here on the metrics sink (the advised site)
+    // and the substring-dedup sink (which appended until it moved
+    // onto the combinator): wipe the checkpoint, rerun, output must
+    // be byte-identical.
+    import graft.ops.{CorpusOps, TextAnalysis}
+    import org.apache.spark.sql.DataFrame
     import spark.implicits._
     val docs = GraftSession.table(spark, sf, "documents")
       .select(col("doc_id"), col("text"))
     val tmp = Files.createTempDirectory("evalreplay").toString
     TextAnalysis.writeBm25Index(docs, "doc_id", "text", s"$tmp/idx", buckets = 8)
+    CorpusOps.writeSubstringIndex(docs, "doc_id", "text", s"$tmp/subidx", window = 8)
     val qs = Seq((1L, "spark window agg"), (2L, "customer query data"))
       .toDF("query_id", "qtext")
     qs.coalesce(1).write.mode("overwrite").parquet(s"$tmp/q")
-    def run(): Unit =
-      EventsStream.streamRetrievalEval(spark, s"$tmp/idx", s"$tmp/q", qs.schema,
-        docs, s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-    def state() = spark.read.parquet(s"$tmp/out")
-      .orderBy("query_id").collect().map(_.toSeq).toSeq
-    run()
-    val once = state()
-    assert(once.nonEmpty)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$tmp/ckpt"))
-    run()
-    assert(state() === once,
-      "checkpoint-wipe replay duplicated metric rows — sink not exactly-once")
+    val fresh = docs.filter(col("doc_id") < 20)
+      .select((col("doc_id") + 10000).as("doc_id"), col("text"))
+    fresh.coalesce(1).write.mode("overwrite").parquet(s"$tmp/docs")
+    val sinks = Seq[(String, String, org.apache.spark.sql.types.StructType,
+        (DataFrame, Long) => DataFrame)](
+      ("metrics", s"$tmp/q", qs.schema, (b, _) => {
+        val top = TextAnalysis.probeBm25Index(spark, s"$tmp/idx", b, "query_id", "qtext", k = 10)
+          .select(col("query_id"), col("doc_id"), col("rank"))
+        TextAnalysis.retrievalMetrics(top, docs, "doc_id", "text", b, "query_id", "qtext")
+      }),
+      ("substring", s"$tmp/docs", fresh.schema, (b, _) =>
+        CorpusOps.probeSubstringIndex(spark, s"$tmp/subidx", b, "doc_id", "text", window = 8)))
+    for ((name, src, schema, op) <- sinks) {
+      def run(): Unit =
+        EventsStream.incrementalSink(spark, src, schema, s"$tmp/$name-out",
+          s"$tmp/$name-ckpt")(op).awaitTermination()
+      def state() = spark.read.parquet(s"$tmp/$name-out")
+        .collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+      run()
+      val once = state()
+      assert(once.nonEmpty, name)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$tmp/$name-ckpt"))
+      run()
+      assert(state() === once,
+        s"$name: checkpoint-wipe replay duplicated rows — sink not exactly-once")
+    }
   }
 }
